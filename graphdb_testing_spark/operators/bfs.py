@@ -344,10 +344,13 @@ def bfs(
     narrow = False
     if id_type == "bigint":
         r = e.agg(F.min("src").alias("lo"), F.max("src").alias("hi")).collect()[0]
+        # the seed row carries ``source`` itself, which need not be
+        # a graph vertex, so it must fit int32 too
         narrow = (
             r["lo"] is not None
             and int(r["lo"]) >= -(2**31)
             and int(r["hi"]) <= 2**31 - 1
+            and -(2**31) <= source <= 2**31 - 1
         )
     if narrow:
         e = e.select(

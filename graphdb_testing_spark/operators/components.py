@@ -94,8 +94,6 @@ def connected_components(
     unroll: int = 4,  # chunk-end pointer jump collapses chains, so
     # low-diameter graphs converge in 1-2 chunks; linear plan growth
     # makes larger unrolls safe for high-diameter graphs
-    pointer_jump: bool = True,
-    dst_partitioned: bool = False,
 ) -> DataFrame:
     """``(id, label)`` where ``label`` = min vertex id in the component.
 
@@ -129,8 +127,8 @@ def connected_components(
     # paying an up-front materialization of a second full edge copy
     # (measured 52.8s -> 36.9s for CC on the 16M-edge medium graph).
     ne = edges.count()
-    record_fast_path("components", not dst_partitioned and ne <= LOCAL_NE_MAX)
-    if not dst_partitioned and ne <= LOCAL_NE_MAX:
+    record_fast_path("components", ne <= LOCAL_NE_MAX)
+    if ne <= LOCAL_NE_MAX:
         # guarded single-task fast path (round-10): the per-round cost
         # at sf0.1 is stage scheduling + AQE re-planning for tiny
         # shuffles, not compute.  The fixpoint is the same min-id
@@ -168,43 +166,15 @@ def connected_components(
         e_rel = edges.select("src", "dst")
     e_self = e_rel.unionAll(
         ids.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    )
-    if dst_partitioned:
-        # bucketed-layout variant: materialize the constant relation
-        # hash-partitioned on the per-round join key.  persist() (not
-        # localCheckpoint — LogicalRDD drops outputPartitioning to
-        # Unknown, measured) keeps the HashPartitioning visible to
-        # EnsureRequirements, so every round's join reads the edge
-        # side with NO Exchange (the in-session equivalent of a
-        # dst-bucketed store, ``sources/bucketed.py``) and only the
-        # O(nv) label side shuffles.  The trade: the layout freezes the
-        # power-law dst skew that AQE would otherwise split per round,
-        # and the union materializes a second full edge copy up front —
-        # measured A/B at SCALE (see BENCHMARKS.md) decides, not theory.
-        e_self = e_self.repartition(iter_partitions(ne), "dst").persist()
-        e_self.count()
-    else:
-        e_self = e_self.coalesce(iter_partitions(ne))
+    ).coalesce(iter_partitions(ne))
     labels = ids.withColumn("label", F.col("id")).localCheckpoint()
     nv = labels.count()
     prev_sum = labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
 
-    # opt-in chunk profile (SPARK_GRAFT_CC_PROFILE=1): one stderr line
-    # per unrolled chunk with its wall seconds — the discriminator
-    # between "every round got slower" (ambient/platform) and "extra
-    # or pathological rounds appeared" (plan/convergence), at zero
-    # cost when off
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _prof = _os.environ.get("SPARK_GRAFT_CC_PROFILE") == "1"
-
     done = 0
     while done < max_iter:
-        _t0 = _time.time()
         k = min(unroll, max_iter - done)
         chunk_start = labels
         for _ in range(k):
@@ -214,36 +184,26 @@ def connected_components(
                 .agg(F.min("label").alias("label"))
             )
         labels = labels.localCheckpoint()
-        if pointer_jump:
-            # one cheap jump on materialized labels: O(1) plan size here
-            parents = labels.select(
-                F.col("id").alias("p_id"), F.col("label").alias("p_label")
+        # one cheap jump on materialized labels: O(1) plan size here
+        parents = labels.select(
+            F.col("id").alias("p_id"), F.col("label").alias("p_label")
+        )
+        labels = (
+            labels.join(
+                state_hint(parents, nv), labels.label == parents.p_id, "left"
             )
-            labels = (
-                labels.join(
-                    state_hint(parents, nv), labels.label == parents.p_id, "left"
-                )
-                .select("id", F.coalesce("p_label", "label").alias("label"))
-                .localCheckpoint()
-            )
+            .select("id", F.coalesce("p_label", "label").alias("label"))
+            .localCheckpoint()
+        )
         done += k
         cur_sum = labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
         chunk_start.unpersist()
-        if _prof:
-            print(
-                f"[cc-profile] chunk rounds {done - k + 1}..{done} "
-                f"(+jump): {_time.time() - _t0:.1f}s "
-                f"converged={cur_sum == prev_sum}",
-                file=_sys.stderr,
-            )
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
     ids_ck.unpersist()
-    if dst_partitioned:
-        e_self.unpersist()
     if narrow:
         labels = labels.select(
             F.col("id").cast(id_type).alias("id"),

@@ -186,7 +186,6 @@ def pagerank(
     unroll: int = 10,  # one broadcast + one shuffle per round; chunk
     # cost is ~linear in unroll, so 10 mainly amortizes delta checks
     init_ranks: DataFrame | None = None,
-    dst_partitioned: bool = False,
 ) -> DataFrame:
     """``(id, pr)`` PageRank over a symmetric edge table.
 
@@ -197,7 +196,8 @@ def pagerank(
     decremented, so epsilon is the only real exit there too).
 
     ``init_ranks`` warm-starts the iteration from a previous ``(id,
-    pr)`` result (vertices absent there start at ``1/nv``): the power
+    pr)`` result (vertices absent there, or with a NULL or NaN rank,
+    start at ``1/nv``): the power
     iteration's fixpoint is unique, so the answer is identical — only
     the rounds-to-converge shrink, which is the incremental-update
     path the streaming workflow uses after small edge batches.  Warm
@@ -206,10 +206,18 @@ def pagerank(
     """
     e = edges.select("src", "dst")
     ne = edges.count()
-    record_fast_path("pagerank", not dst_partitioned and ne <= LOCAL_NE_MAX)
+    record_fast_path("pagerank", ne <= LOCAL_NE_MAX)
     if ne == 0:
         return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
-    if not dst_partitioned and ne <= LOCAL_NE_MAX:
+    if init_ranks is not None:
+        # a NULL or NaN warm rank says nothing about the vertex: drop
+        # the row so it starts at 1/nv, as if absent (the single-task
+        # path would otherwise read a NULL-rank row as an edge row)
+        pr = F.col("pr").cast("double")
+        init_ranks = init_ranks.select("id", pr.alias("pr")).filter(
+            pr.isNotNull() & ~F.isnan(pr)
+        )
+    if ne <= LOCAL_NE_MAX:
         # guarded single-task fast path (round-10 optimization): at
         # sf0.1 each of the 100 convergence rounds costs ~0.2 s of
         # per-stage scheduling + AQE re-planning + a driver broadcast
@@ -224,8 +232,7 @@ def pagerank(
         # so the up-front groupBy(src) shuffle was pure waste there
         # (round-10 verdict item 8: no redundant jobs under guards).
         # Past the guard — every real cluster-scale graph — the
-        # unrolled DataFrame loop below is unchanged, including the
-        # dst_partitioned layout variant.
+        # unrolled DataFrame loop below runs.
         return _local_pagerank(
             e, damping, tol, max_iter, num_iter, unroll, init_ranks
         )
@@ -281,22 +288,9 @@ def pagerank(
     e2 = (
         e.join(deg_b.withColumnRenamed("id", "src"), "src")
         .select("src", "dst", F.col("degree").alias("deg_src"))
+        .coalesce(iter_partitions(ne))
+        .localCheckpoint()
     )
-    if dst_partitioned:
-        # bucketed-layout variant (same trade as in
-        # ``connected_components``): hash-partition the constant
-        # relation on the per-round join key and persist() it — cache,
-        # not localCheckpoint, because LogicalRDD drops
-        # outputPartitioning to Unknown (measured) while
-        # InMemoryRelation carries it — so the per-round join
-        # exchanges only the state side.  The scale-18 A/B in the
-        # comment above rejected this (skew-frozen layout vs AQE
-        # splitting); the SCALE-24 A/B re-measures where the effect
-        # is resolvable.
-        e2 = e2.repartition(iter_partitions(ne), "dst").persist()
-        e2.count()
-    else:
-        e2 = e2.coalesce(iter_partitions(ne)).localCheckpoint()
 
     # state: (id, prd, degree) with prd = pr / degree; degree rides
     # along (constant per vertex, re-emitted by each round's agg) so

@@ -13,11 +13,13 @@ Structured Streaming ``foreachBatch`` callback
 (:func:`run_structured_stream`) — batch replay and live streaming
 share one code path, which is the point of the design.
 
-Incremental algorithms (A4 triangles / A7 components): Spark state is
-immutable DataFrames, so the honest mapping is recompute-per-batch
-(SURVEY.md §2.5 A7 note); ``IncrementalComponents`` adds the
-insert-only fast path (new edges can only merge components — one
-min-label join pass over the delta instead of a full fixpoint).
+Incremental algorithms: A4 triangles carry per-vertex counts and
+apply an exact delta per batch; PageRank warm-starts from the previous
+ranks.  A7 components is a cold recompute per batch, the honest Spark
+mapping of the reference's in-place spanning-forest repair (SURVEY.md
+§2.5 A7 note): on the reference's action stream nearly every batch
+holds a delete, and on R-MAT a delete's component is the giant one,
+so a component-local repair re-solves almost the whole graph anyway.
 """
 
 from __future__ import annotations
@@ -53,14 +55,12 @@ class BatchAlg:
 class IncrementalComponents(BatchAlg):
     """A7: streaming connected components.
 
-    Insert-only batches take the fast path — new edges joined to the
-    current labels, one min-propagation round merges the touched
-    components (plus pointer jumps to fixpoint only over the affected
-    label set).  Batches containing deletions take the
-    component-local repair path (:meth:`_repair_after_deletes`): only
-    the components containing batch endpoints are re-solved, the
-    Spark analog of the reference's spanning-forest repair
-    (``src/alg/streaming_components.c:119-190``).
+    After each batch the labels are a cold :func:`connected_components`
+    over the merged edge table, published as the ``components`` result.
+    The reference repairs its spanning forest in place
+    (``src/alg/streaming_components.c:119-190``); here the CC kernel's
+    own size guard picks the single-task or the distributed fixpoint,
+    so the streaming layer keeps no regime logic of its own.
     """
 
     name = "components"
@@ -69,206 +69,11 @@ class IncrementalComponents(BatchAlg):
         self.labels: DataFrame | None = None
 
     def init(self, edges: DataFrame, store: NamedResultStore) -> None:
-        self.labels = connected_components(edges)
+        self.labels = connected_components(edges).localCheckpoint()
         store.publish(self.name, self.labels)
-
-    def _repair_after_deletes(self, edges: DataFrame, batch: DataFrame) -> DataFrame:
-        """Component-local repair for batches containing deletions.
-
-        Reference (``tests/stinger/src/alg/streaming_components.c:119-190``)
-        repairs only the component that lost an edge; everything else
-        keeps its label.  Spark mapping: deletes can only *split* the
-        components containing the deleted edges, and inserts can only
-        *merge* components containing batch endpoints — so every label
-        that can change belongs to a batch endpoint's old component.
-        We therefore (1) collect the O(|batch|) set of affected old
-        labels, (2) broadcast-semi-join the edge table down to edges
-        whose endpoints lie in those components, (3) re-run the CC
-        kernel on that (usually tiny) subgraph, and (4) stitch:
-        unaffected rows of the old label table pass through untouched.
-
-        Scale shape: the full edge table is read ONCE through a
-        broadcast semi-join filter (no shuffle of the big side); the
-        multi-round CC fixpoint runs only over the affected subgraph.
-        Labels are globally min-vertex-id, and affected components are
-        wholly contained in the subgraph, so re-computed labels are
-        exactly what a full recompute would assign — parity-tested in
-        ``tests/test_streaming.py``.
-        """
-        from ..operators.updates import decode_actions
-
-        decoded = decode_actions(batch).select(
-            F.col("src").alias("u"), F.col("dst").alias("v")
-        )
-        endpoints = (
-            decoded.select(F.col("u").alias("id"))
-            .unionAll(decoded.select(F.col("v").alias("id")))
-            .distinct()
-        )
-        labels = self.labels
-        assert labels is not None
-        # affected old labels: endpoints' components, plus brand-new
-        # vertices (not in the label table — their "old label" is
-        # themselves).  O(|batch|) rows — broadcastable by construction.
-        affected = (
-            labels.join(endpoints, "id", "left_semi")
-            .select("label")
-            .unionAll(
-                endpoints.join(labels, "id", "left_anti").select(
-                    F.col("id").alias("label")
-                )
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        # vertex ids inside affected components (old view) + new ids
-        affected_ids = (
-            labels.join(F.broadcast(affected), "label", "left_semi")
-            .select("id")
-            .unionAll(endpoints.join(labels, "id", "left_anti"))
-            .distinct()
-            .localCheckpoint()
-        )
-        sub_edges = edges.join(
-            affected_ids.withColumnRenamed("id", "src"), "src", "left_semi"
-        ).localCheckpoint()
-        keep = labels.join(F.broadcast(affected), "label", "left_anti")
-        if sub_edges.limit(1).count() == 0:
-            return keep.localCheckpoint()
-        sub_labels = connected_components(sub_edges)
-        return keep.unionByName(sub_labels).localCheckpoint()
 
     def after_batch(self, edges: DataFrame, batch: DataFrame, store: NamedResultStore) -> None:
-        has_delete = batch.filter(F.col("src") < 0).limit(1).count() > 0
-        if self.labels is None:
-            self.labels = connected_components(edges)
-        elif has_delete:
-            self.labels = self._repair_after_deletes(edges, batch)
-        else:
-            # insert-only: union-merge via repeated min-label over the
-            # (small) delta edge set until stable
-            delta = batch.select(
-                F.col("src").alias("u"), F.col("dst").alias("v")
-            )
-            delta = delta.unionAll(
-                delta.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).filter(F.col("u") != F.col("v"))
-            labels = self.labels
-            new_ids = (
-                delta.select(F.col("u").alias("id"))
-                .distinct()
-                .join(labels, "id", "left_anti")
-                .withColumn("label", F.col("id"))
-            )
-            labels = labels.unionByName(new_ids).localCheckpoint()
-            # Scale discipline: the merge loop must never touch (let
-            # alone broadcast) the full O(nv) label table.  Only the
-            # delta's endpoints can trigger merges, and merging is a
-            # pure label-level operation — so restrict the loop to the
-            # labels of touched vertices (O(|delta|)), and apply ONE
-            # composed original-label → final-label remap to the full
-            # table afterwards.  At 1000 executors the big table is
-            # read twice (semi-join + final remap join), never
-            # collected or broadcast.
-            touched = delta.select(F.col("u").alias("id")).distinct()
-            sub = labels.join(touched, "id", "left_semi").localCheckpoint()
-            orig = sub  # id → pre-merge label, anchors the composed remap
-            at_fixpoint = False
-            for _ in range(20):
-                l_u = sub.withColumnRenamed("id", "u").withColumnRenamed(
-                    "label", "lu"
-                )
-                l_v = sub.withColumnRenamed("id", "v").withColumnRenamed(
-                    "label", "lv"
-                )
-                moves = (
-                    delta.join(F.broadcast(l_u), "u")
-                    .join(F.broadcast(l_v), "v")
-                    .filter(F.col("lu") != F.col("lv"))
-                )
-                if moves.limit(1).count() == 0:
-                    at_fixpoint = True
-                    break
-                # merge: everything labeled max(lu,lv) -> min(lu,lv)
-                remap = (
-                    moves.select(
-                        F.greatest("lu", "lv").alias("from_label"),
-                        F.least("lu", "lv").alias("to_label"),
-                    )
-                    .groupBy("from_label")
-                    .agg(F.min("to_label").alias("to_label"))
-                ).localCheckpoint()
-                # Pointer-jump the remap to transitive closure before
-                # applying it: a→b, b→c becomes a→c, c stays, so a
-                # chain of k merging components collapses in O(log k)
-                # outer rounds instead of one hop per round.  The remap
-                # table is O(|delta|) — the self-joins are broadcasts.
-                for _ in range(6):
-                    nxt = remap.withColumnRenamed(
-                        "from_label", "j_from"
-                    ).withColumnRenamed("to_label", "j_to")
-                    jumped = (
-                        remap.join(
-                            F.broadcast(nxt),
-                            remap.to_label == nxt.j_from,
-                            "left",
-                        )
-                        .select(
-                            "from_label",
-                            F.coalesce("j_to", "to_label").alias("to_label"),
-                        )
-                        .localCheckpoint()
-                    )
-                    changed = (
-                        jumped.subtract(remap).limit(1).count() > 0
-                    )
-                    remap = jumped
-                    if not changed:
-                        break
-                sub = (
-                    sub.join(
-                        F.broadcast(remap),
-                        sub.label == remap.from_label,
-                        "left",
-                    )
-                    .select(
-                        "id",
-                        F.coalesce("to_label", "label").alias("label"),
-                    )
-                    .localCheckpoint()
-                )
-            if not at_fixpoint:
-                # Safety net (ADVICE r2): a pathological batch that
-                # still has cross-label delta edges after 20 rounds
-                # means the composed remap below would be built on a
-                # non-fixpoint state — fall back to the always-correct
-                # full recompute rather than publish wrong labels.
-                self.labels = connected_components(edges)
-                store.publish(self.name, self.labels)
-                return
-            # Label-level remaps hit every vertex sharing a label
-            # identically, so (pre-merge label → post-merge label) is a
-            # well-defined function; the loop ran to fixpoint, so it
-            # has no chains.  |remap| ≤ |delta| — broadcastable by
-            # construction.
-            final_remap = (
-                orig.withColumnRenamed("label", "from_label")
-                .join(sub.withColumnRenamed("label", "to_label"), "id")
-                .select("from_label", "to_label")
-                .filter(F.col("from_label") != F.col("to_label"))
-                .distinct()
-            )
-            labels = (
-                labels.join(
-                    F.broadcast(final_remap),
-                    labels.label == final_remap.from_label,
-                    "left",
-                )
-                .select("id", F.coalesce("to_label", "label").alias("label"))
-                .localCheckpoint()
-            )
-            self.labels = labels
-        store.publish(self.name, self.labels)
+        self.init(edges, store)
 
 
 class IncrementalPageRank(BatchAlg):
@@ -439,6 +244,7 @@ class ActionStreamWorkflow:
         self.edges = edges.localCheckpoint()
         self.algs = algs or []
         self.store = store or NamedResultStore()
+        self._initialized = False
 
     def run(self, actions: DataFrame, batch_size: int) -> WorkflowResult:
         bounds = actions.agg(
@@ -446,8 +252,12 @@ class ActionStreamWorkflow:
         ).collect()[0]
         if bounds["n"] == 0:
             return WorkflowResult(0, 0, 0.0, float("inf"))
-        for alg in self.algs:
-            alg.init(self.edges, self.store)
+        if not self._initialized:
+            # once per workflow: a stream replayed over several run()
+            # calls keeps its algorithms' state
+            for alg in self.algs:
+                alg.init(self.edges, self.store)
+            self._initialized = True
         lo, hi = bounds["lo"], bounds["hi"]
         per_batch: list[float] = []
         t_total = time.time()
@@ -1998,8 +1808,8 @@ def streaming_retention_decisions(
        kernel runs on that O(|new pairs|) rep graph only, and the
        label table relabels through the result — min-label
        invariant preserved, so a cluster's label IS its canonical
-       min doc id (the insert fast path of ``IncrementalComponents``,
-       specialized to an insert-only pair stream);
+       min doc id (an insert-only pair stream can only merge
+       clusters, so no cluster is ever re-solved from scratch);
     4. decisions for the batch's documents against the merged labels.
 
     Scale shape: the persisted state is (signature bands, labels) —

@@ -72,3 +72,14 @@ def test_local_multi_source_bfs_matches(spark, weighted_edges, monkeypatch, root
     monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.multi_source_bfs(weighted_edges, roots, max_depth=depth))
     assert fast == slow
+
+
+def test_bfs_source_past_int32_on_narrow_ids(spark, weighted_edges, monkeypatch):
+    """Every graph id fits int32 but the source does not: the
+    DataFrame path must fall back to long ids and, like the
+    single-task path, return the lone seed row."""
+    source = 2**40
+    fast = _rows(bfsmod.bfs(weighted_edges, source))
+    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    slow = _rows(bfsmod.bfs(weighted_edges, source))
+    assert fast == slow == {(source, 0)}

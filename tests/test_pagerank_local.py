@@ -52,12 +52,19 @@ def test_local_is_deterministic_across_layouts(spark, sym_edges):
     assert a == b
 
 
-def test_dst_partitioned_stays_on_dataframe_path(spark, sym_edges):
-    """The layout-flag variant must keep its plan (the flag exists to
-    A/B the distributed layout) — parity of values still holds."""
-    flag = _r6(prmod.pagerank(sym_edges, num_iter=3, dst_partitioned=True))
-    fast = _r6(prmod.pagerank(sym_edges, num_iter=3))
-    assert flag == fast
+@pytest.mark.parametrize("bad", [None, float("nan")])
+def test_null_warm_rank_equals_omitted_vertex(spark, sym_edges, monkeypatch, bad):
+    """A NULL or NaN warm rank is dropped on both paths: the result
+    equals a warm start that omits that vertex."""
+    seed = prmod.pagerank(sym_edges, num_iter=4).localCheckpoint()
+    rest = seed.filter(F.col("id") != 7)
+    bad_row = spark.createDataFrame([(7, bad)], "id long, pr double")
+    with_bad = rest.unionByName(bad_row)
+    for ne_max in (prmod.LOCAL_NE_MAX, 0):
+        monkeypatch.setattr(prmod, "LOCAL_NE_MAX", ne_max)
+        got = _r6(prmod.pagerank(sym_edges, init_ranks=with_bad, num_iter=3))
+        want = _r6(prmod.pagerank(sym_edges, init_ranks=rest, num_iter=3))
+        assert got == want, ne_max
 
 
 def test_mass_conservation(spark, sym_edges):

@@ -6,11 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from graphdb_testing_spark.operators.components import component_count, connected_components
 from graphdb_testing_spark.operators.updates import apply_actions
 from graphdb_testing_spark.sources import rmat
 from graphdb_testing_spark.streaming.workflow import (
     ActionStreamWorkflow,
+    BatchAlg,
     IncrementalComponents,
     IncrementalTriangles,
     run_structured_stream,
@@ -41,112 +41,100 @@ def test_batched_replay_equals_single_merge(spark):
     assert res.actions_per_sec > 0
 
 
-def test_incremental_components_insert_fast_path(spark):
-    base = _edges(spark, [(1, 2, 1), (2, 1, 1), (3, 4, 1), (4, 3, 1)])
+def _sym(spark, pairs):
+    """Symmetric weight-1 edge table over undirected ``pairs``."""
+    return _edges(spark, [(u, v, 1) for a, b in pairs for u, v in ((a, b), (b, a))])
+
+
+def _uf_labels(edges):
+    """Plain-Python union-find over an edge table: vertex -> min id of
+    its component (roots are always their set's minimum)."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in edges.collect():
+        parent.setdefault(r.src, r.src)
+        parent.setdefault(r.dst, r.dst)
+        a, b = find(r.src), find(r.dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {x: find(x) for x in parent}
+
+
+_PATH = [(1, 2), (2, 3), (3, 4)]
+
+
+@pytest.mark.parametrize(
+    "pairs,actions",
+    [
+        # insert bridges two components
+        ([(1, 2), (3, 4)], [(0, 2, 3, 1)]),
+        # delete the bridge 2-3 of a path (complement encoding)
+        (_PATH, [(0, -3, -4, 1)]),
+        # three components; the delete touches only the path
+        (_PATH + [(10, 11), (11, 12), (10, 12), (20, 21)], [(0, -3, -4, 1)]),
+        # one batch splits 2-3 and merges 3 into {5, 6}
+        ([(1, 2), (2, 3), (5, 6)], [(0, -3, -4, 1), (1, 3, 5, 1)]),
+        # deleting 3-4 leaves both vertices without edges: they vanish
+        ([(1, 2), (3, 4)], [(0, -4, -5, 1)]),
+        # 30 disjoint edges chained into one component by 29 inserts
+        ([(2 * i, 2 * i + 1) for i in range(30)],
+         [(i, 2 * i + 1, 2 * i + 2, 1) for i in range(29)]),
+    ],
+    ids=[
+        "bridge_insert", "bridge_delete", "three_components_one_touched",
+        "mixed", "vertex_vanishes", "insert_chain",
+    ],
+)
+def test_incremental_components_matches_union_find(spark, pairs, actions):
+    alg = IncrementalComponents()
+    wf = ActionStreamWorkflow(_sym(spark, pairs), algs=[alg])
+    wf.run(_actions(spark, actions), batch_size=100)
+    got = {r.id: r.label for r in wf.store.get("components").collect()}
+    assert got == _uf_labels(wf.edges)
+
+
+def test_incremental_components_tracks_rmat_stream(spark):
+    """State carried across batches: a seeded R-MAT action stream with
+    P(delete) = 1/16, one ``run()`` per batch, labels checked against
+    union-find over the merged edge table after every batch."""
+    base = rmat.rmat_graph(spark, scale=4, edge_factor=2, seed=3)
+    acts = rmat.rmat_actions(spark, scale=4, num_actions=160, seed=5).localCheckpoint()
+    assert acts.filter(F.col("src") < 0).count() > 0
     alg = IncrementalComponents()
     wf = ActionStreamWorkflow(base, algs=[alg])
-    # insert-only batch bridges the two components (no deletes)
-    acts = _actions(spark, [(0, 2, 3, 1)])
-    wf.run(acts, batch_size=10)
-    labels = wf.store.get("components")
-    assert component_count(labels) == 1
-    got = {r.id: r.label for r in labels.collect()}
-    assert set(got.values()) == {1}
+    for k in range(4):
+        batch = acts.filter((F.col("seq") >= 40 * k) & (F.col("seq") < 40 * (k + 1)))
+        wf.run(batch, batch_size=40)
+        got = {r.id: r.label for r in alg.labels.collect()}
+        assert got == _uf_labels(wf.edges), f"batch {k}"
 
 
-def test_incremental_components_delete_fallback(spark):
-    base = _edges(
-        spark,
-        [(1, 2, 1), (2, 1, 1), (2, 3, 1), (3, 2, 1), (3, 4, 1), (4, 3, 1)],
-    )
-    alg = IncrementalComponents()
-    wf = ActionStreamWorkflow(base, algs=[alg])
-    # delete the bridge 2-3 -> {1,2} and {3,4} (complement encoding)
-    acts = _actions(spark, [(0, -3, -4, 1)])
-    wf.run(acts, batch_size=10)
-    labels = wf.store.get("components")
-    assert component_count(labels) == 2
-    # matches full recompute on the final edge table
-    full = connected_components(wf.edges)
-    assert {(r.id, r.label) for r in labels.collect()} == {
-        (r.id, r.label) for r in full.collect()
-    }
+def test_workflow_initialises_algorithms_once(spark):
+    """A stream replayed over several ``run()`` calls keeps its
+    algorithms' state: ``init`` runs on the first call only."""
 
+    class Counting(BatchAlg):
+        def __init__(self):
+            self.inits = 0
+            self.batches = 0
 
-def test_incremental_components_delete_repair_is_component_local(spark):
-    # three components; the delete touches only the path component —
-    # repair must re-solve just that one and stitch the rest through
-    base = _edges(
-        spark,
-        # path 1-2-3-4 (split target)
-        [(1, 2, 1), (2, 1, 1), (2, 3, 1), (3, 2, 1), (3, 4, 1), (4, 3, 1)]
-        # triangle 10-11-12 (untouched)
-        + [(10, 11, 1), (11, 10, 1), (11, 12, 1), (12, 11, 1), (10, 12, 1), (12, 10, 1)]
-        # pair 20-21 (untouched)
-        + [(20, 21, 1), (21, 20, 1)],
-    )
-    alg = IncrementalComponents()
-    wf = ActionStreamWorkflow(base, algs=[alg])
-    acts = _actions(spark, [(0, -3, -4, 1)])  # delete 2-3 (complement enc)
-    wf.run(acts, batch_size=10)
-    labels = wf.store.get("components")
-    full = connected_components(wf.edges)
-    assert {(r.id, r.label) for r in labels.collect()} == {
-        (r.id, r.label) for r in full.collect()
-    }
-    assert component_count(labels) == 4
+        def init(self, edges, store):
+            self.inits += 1
 
+        def after_batch(self, edges, batch, store):
+            self.batches += 1
 
-def test_incremental_components_mixed_insert_delete_batch(spark):
-    base = _edges(
-        spark,
-        [(1, 2, 1), (2, 1, 1), (2, 3, 1), (3, 2, 1), (5, 6, 1), (6, 5, 1)],
-    )
-    alg = IncrementalComponents()
-    wf = ActionStreamWorkflow(base, algs=[alg])
-    # one batch: delete 2-3 (split) AND insert 3-5 (merge into {5,6})
-    acts = _actions(spark, [(0, -3, -4, 1), (1, 3, 5, 1)])
-    wf.run(acts, batch_size=10)
-    labels = wf.store.get("components")
-    full = connected_components(wf.edges)
-    assert {(r.id, r.label) for r in labels.collect()} == {
-        (r.id, r.label) for r in full.collect()
-    }
-
-
-def test_incremental_components_vertex_vanishes_on_full_delete(spark):
-    base = _edges(spark, [(1, 2, 1), (2, 1, 1), (3, 4, 1), (4, 3, 1)])
-    alg = IncrementalComponents()
-    wf = ActionStreamWorkflow(base, algs=[alg])
-    acts = _actions(spark, [(0, -4, -5, 1)])  # delete 3-4 entirely
-    wf.run(acts, batch_size=10)
-    labels = wf.store.get("components")
-    got = {r.id: r.label for r in labels.collect()}
-    # parity with full recompute: 3 and 4 have no edges left -> absent
-    assert got == {1: 1, 2: 1}
-
-
-def test_incremental_components_long_insert_chain_converges(spark):
-    # 30 singleton-edge components chained into ONE by a single
-    # insert-only batch: one-hop-per-round merging would need ~30
-    # rounds (> the 20-round cap) — the pointer-jumped remap plus the
-    # non-fixpoint fallback (ADVICE r2) must still produce exact labels
-    base = _edges(
-        spark,
-        [(2 * i + d, 2 * i + 1 - d, 1) for i in range(30) for d in (0, 1)],
-    )
-    alg = IncrementalComponents()
-    wf = ActionStreamWorkflow(base, algs=[alg])
-    acts = _actions(
-        spark, [(i, 2 * i + 1, 2 * i + 2, 1) for i in range(29)]
-    )
-    wf.run(acts, batch_size=100)
-    labels = wf.store.get("components")
-    assert component_count(labels) == 1
-    full = connected_components(wf.edges)
-    assert {(r.id, r.label) for r in labels.collect()} == {
-        (r.id, r.label) for r in full.collect()
-    }
+    alg = Counting()
+    wf = ActionStreamWorkflow(_sym(spark, [(1, 2)]), algs=[alg])
+    wf.run(_actions(spark, [(0, 2, 3, 1)]), batch_size=10)
+    wf.run(_actions(spark, [(1, 3, 4, 1)]), batch_size=10)
+    assert (alg.inits, alg.batches) == (1, 2)
 
 
 def test_incremental_triangles_published_per_batch(spark, bowtie_graph):
